@@ -7,15 +7,16 @@ import org.apache.spark.sql.functions._
   * single-partition window.
   * `runMain graft.RankProbe [nRows] [rank|agg|grouped [nGroups]|offset]`
   * (default 50M, rank).
-  * `rank` probes the GlobalRank operator on a corpus-global ranking;
+  * `rank` probes the rank operator on a corpus-global ranking (zero
+  * group keys — EXPLAIN's `GlobalRank`);
   * `agg` probes GlobalAggRewrite on a `sum OVER ()` share-of-total;
   * `grouped` probes GroupedRank on a FEW-HUGE-GROUPS ranking (default
   * 4 groups — the q23-per-nation shape where the native hash window
   * funnels each group through one task; many-small-groups is the
   * regime where the operator costs instead, measured by ScratchGR's
   * per-query A/B at sf0.1);
-  * `offset` probes GlobalOffset on a corpus-global lag/lead pair (the
-  * e33 runningDifference shape);
+  * `offset` probes the zero-key offset operator on a corpus-global
+  * lag/lead pair (the e33 runningDifference shape);
   * `groupedoffset` probes the r20 GroupedOffset operator on the q54
   * shape — per-group lag/lead over few huge interleaved groups (the
   * native hash window's group-count parallelism ceiling);
@@ -25,8 +26,8 @@ import org.apache.spark.sql.functions._
   * `groupedoffsetwide` probes the s22-EMA shape — fifteen lag depths
   * in ONE node over few huge groups, the multi-function regime the
   * scratch-array pass 2 exists for;
-  * `running` probes GlobalRunningAgg on a corpus-global cumulative
-  * sum+count (the q44 shape);
+  * `running` probes the zero-key running-agg operator on a
+  * corpus-global cumulative sum+count (the q44 shape);
   * `chained` probes the r16 tie-chaining path AT SCALE: a FINER
   * pre-existing range exchange (repartitionByRange(d, fine)) under
   * rank/dense_rank/cume_dist + a RANGE running sum ordered by `d`
@@ -34,7 +35,7 @@ import org.apache.spark.sql.functions._
   * splits a group — the exact-long checksum equality between rule-on
   * and rule-off is the 50M-row correctness witness for the driver
   * chain (TieSplitSpec pins the same shapes at spec size).
-  * `mixed` probes the r17 GlobalWindowSplit rule on the q46 shape —
+  * `mixed` probes the split rule on the q46 shape —
   * ONE select mixing all four family classes (rank + cume_dist,
   * running RANGE sum, lag, full-frame total) over the same global
   * total order, which the analyzer merges into ONE Window node: off =
@@ -135,12 +136,11 @@ object RankProbe {
       case "rangeslidingwide" => graft.plans.RangeSlidingAggRewrite.ConsolidateKey
       case "sliding" | "slidinggrouped" | "slidingchained" =>
         graft.plans.SlidingAggRewrite.ConfKey
-      case "offset" | "offsetnn" => graft.plans.GlobalOffsetRewrite.ConfKey
-      case "groupedoffset" | "groupedoffsetchained" | "groupedoffsetwide" |
-          "groupedoffsetnn" =>
+      case "offset" | "offsetnn" | "groupedoffset" | "groupedoffsetchained" |
+          "groupedoffsetwide" | "groupedoffsetnn" =>
         graft.plans.GroupedOffsetRewrite.ConfKey
-      case "running" => graft.plans.GlobalRunningAggRewrite.ConfKey
-      case _ => graft.plans.GlobalRankRewrite.ConfKey
+      case "running" => graft.plans.GroupedRunningAggRewrite.ConfKey
+      case _ => graft.plans.GroupedRankRewrite.ConfKey
     }
     if (mode == "chained" || mode == "mixedchained" ||
         mode == "groupedrunningchained" || mode == "groupedmixedchained" ||
@@ -150,20 +150,17 @@ object RankProbe {
       s.conf.set(confKey, on.toString)
       // the chained stack exercises BOTH operators in one plan
       if (mode == "chained")
-        s.conf.set(graft.plans.GlobalRunningAggRewrite.ConfKey, on.toString)
-      // the mixed split plans all four families out of one node: the
-      // off branch must silence every one of them to get the true
-      // pre-r17 native mixed funnel
+        s.conf.set(graft.plans.GroupedRunningAggRewrite.ConfKey, on.toString)
+      // the split plans every family out of one mixed node: the off
+      // branch must silence every one of them to get the true native
+      // mixed funnel (pre-r17 global, pre-r18 grouped)
       if (mode == "mixed" || mode == "mixedchained")
-        Seq(graft.plans.GlobalWindowSplit.ConfKey,
-          graft.plans.GlobalRankRewrite.ConfKey,
-          graft.plans.GlobalRunningAggRewrite.ConfKey,
-          graft.plans.GlobalOffsetRewrite.ConfKey,
+        Seq(graft.plans.GroupedWindowSplit.ConfKey,
+          graft.plans.GroupedRankRewrite.ConfKey,
+          graft.plans.GroupedRunningAggRewrite.ConfKey,
+          graft.plans.GroupedOffsetRewrite.ConfKey,
           graft.plans.GlobalAggRewrite.ConfKey)
           .foreach(k => s.conf.set(k, on.toString))
-      // the grouped split plans both grouped families out of one
-      // node: the off branch silences both to get the true pre-r18
-      // native hash funnel
       if (mode == "groupedmixed" || mode == "groupedmixedchained")
         Seq(graft.plans.GroupedWindowSplit.ConfKey,
           graft.plans.GroupedRankRewrite.ConfKey,

@@ -61,59 +61,37 @@ object GraftExtensions extends SparkSessionExtensionsProvider {
     // buffering in one window task. Before the splits for the same
     // mixed-SPEC reason as GlobalAggRewrite.
     ext.injectOptimizerRule(_ => graft.plans.GroupedAggRewrite)
-    // Mixed-function empty-PARTITION-BY windows (rank()+sum() OVER the
-    // same global order in ONE select analyze into ONE Window node) are
-    // split by function class into the stacked operator nodes below, so
-    // the family composes automatically instead of the mixed node
-    // bailing every rewrite and funneling to a single task.
-    ext.injectOptimizerRule(_ => graft.plans.GlobalWindowSplit)
-    // Mixed GROUPED windows (rank()+sum()+lag() OVER the same
-    // PARTITION BY/ORDER BY in ONE select): split onto GroupedRank +
-    // GroupedRunningAgg + GroupedOffset over ONE shared (part, order)
-    // range exchange — the grouped analog; otherwise-unsupported
-    // mixes keep the whole node native.
+    // Mixed-function windows (rank()+sum()+lag() OVER the same
+    // [PARTITION BY/] ORDER BY in ONE select analyze into ONE Window
+    // node) are split by function class into the stacked operator
+    // nodes below over ONE shared range exchange, so the family
+    // composes automatically instead of the mixed node bailing every
+    // rewrite and funneling; otherwise-unsupported mixes keep the
+    // whole node native.
     ext.injectOptimizerRule(_ => graft.plans.GroupedWindowSplit)
-    // Corpus-global ranking: bare rank-family windows with an empty
-    // PARTITION BY are rewritten to the range-partitioned two-pass
-    // operator (TopKRewrite runs first, so filter(rank <= k) keeps
-    // the cheaper heap path; this catches the full rankings).
-    ext.injectOptimizerRule(_ => graft.plans.GlobalRankRewrite)
-    ext.injectPlannerStrategy(_ => graft.plans.GlobalRankStrategy)
+    // Ranking: bare rank-family windows, with or without partition
+    // keys, are rewritten to the range-partitioned two-pass operator,
+    // so neither the corpus nor a group larger than a task funnels into
+    // one (the operator form of q23/m11's hand idiom; TopKRewrite runs
+    // first, so filter(rank <= k) keeps the cheaper heap path).
+    ext.injectOptimizerRule(_ => graft.plans.GroupedRankRewrite)
     // The 2^31 escape hatch (spark.graft.globalRank.longRank=true):
     // an ANALYZER rule swaps row_number/rank/dense_rank on global
     // windows for LongType variants — analysis-time so the Dataset
     // schema/encoders and downstream coercion all agree on the type;
-    // GlobalRankRewrite then recognizes them, and the native
+    // GroupedRankRewrite then recognizes them, and the native
     // WindowExec evaluates them whenever the rewrite bails.
     ext.injectResolutionRule(_ => LongRankWiden)
-    // Grouped ranking: rank-family windows WITH partition keys are
-    // rewritten to the same range-partitioned two-pass discipline, so
-    // a group larger than a task never funnels into one (the operator
-    // form of q23/m11's hand idiom; TopKRewrite still wins on
-    // filter(rank <= k)).
-    ext.injectOptimizerRule(_ => graft.plans.GroupedRankRewrite)
-    ext.injectPlannerStrategy(_ => graft.plans.GroupedRankStrategy)
-    // Grouped RUNNING aggregates (sum(x) OVER (PARTITION BY g ORDER
-    // BY …)): GroupedRank's sibling for the aggregate class — the
-    // native hash-clustered window's parallelism ceiling is the group
-    // count, so groups that outgrow a task funnel; the operator
-    // range-partitions (group, order) and chains boundary segments.
+    // RUNNING aggregates (sum(x) OVER ([PARTITION BY g] ORDER BY …)):
+    // a distributed prefix scan — the operator range-partitions
+    // (group, order), chains boundary segments and folds per-partition
+    // partials on the driver.
     ext.injectOptimizerRule(_ => graft.plans.GroupedRunningAggRewrite)
-    ext.injectPlannerStrategy(_ => graft.plans.GroupedRunningAggStrategy)
-    // Corpus-global offset windows (lag/lead OVER (ORDER BY …)) — the
-    // third empty-PARTITION-BY funnel: rewritten to the range
-    // exchange + boundary-VALUE exchange instead of the all-rows
-    // single-task window.
-    ext.injectOptimizerRule(_ => graft.plans.GlobalOffsetRewrite)
-    ext.injectPlannerStrategy(_ => graft.plans.GlobalOffsetStrategy)
-    // GROUPED offset windows (lag/lead OVER (PARTITION BY g ORDER BY
-    // …) — per-key runningDifference/neighbor, r20): the native
-    // hash-clustered window's parallelism ceiling is the group count,
-    // so groups that outgrow a task funnel; the operator
-    // range-partitions (group, order) and closes boundaries with
-    // SlidingAgg's key-gated boundary-value rings.
+    // OFFSET windows (lag/lead OVER ([PARTITION BY g] ORDER BY …) —
+    // runningDifference/neighbor, global or per key): the range
+    // exchange + boundary-VALUE rings instead of the single-task or
+    // group-count-capped native window.
     ext.injectOptimizerRule(_ => graft.plans.GroupedOffsetRewrite)
-    ext.injectPlannerStrategy(_ => graft.plans.GroupedOffsetStrategy)
     // Adjacent offset nodes over the same (part, order) merge into
     // ONE multi-function node (r21): the withColumn-chain idiom
     // analyzes into a window tower CollapseWindow only partially
@@ -130,11 +108,6 @@ object GraftExtensions extends SparkSessionExtensionsProvider {
     // demote (they share the family's one range exchange). Running
     // here cannot loop with the rewrite (separate batch, Once).
     ext.injectPreCBORule(_ => graft.plans.DemoteSmallOffsetNodes)
-    // Corpus-global RUNNING aggregates (sum(x) OVER (ORDER BY …)) —
-    // the last empty-PARTITION-BY funnel: a distributed prefix scan
-    // (per-partition partials + driver prefix fold + seeded pass).
-    ext.injectOptimizerRule(_ => graft.plans.GlobalRunningAggRewrite)
-    ext.injectPlannerStrategy(_ => graft.plans.GlobalRunningAggStrategy)
     // Adjacent running-agg nodes over the same (part, order) merge
     // into ONE multi-function node (r21 — CombineOffsetNodes' sibling
     // for the running class; s21's fill columns planned THREE stacked
@@ -143,9 +116,9 @@ object GraftExtensions extends SparkSessionExtensionsProvider {
     // Bounded SLIDING ROWS frames (moving averages / trailing totals,
     // global or grouped): one operator closing both the AllTuples
     // single-task funnel and the group-count ceiling — boundary-VALUE
-    // rings (GlobalOffset's machinery) + per-frame aggregate re-folds.
+    // rings (the offset class's machinery) + per-frame aggregate
+    // re-folds.
     ext.injectOptimizerRule(_ => graft.plans.SlidingAggRewrite)
-    ext.injectPlannerStrategy(_ => graft.plans.SlidingAggStrategy)
     // Bounded RANGE-VALUE sliding frames (trailing-30-day style
     // value windows, global or grouped): the row-halo operator — a
     // distributed executor-to-executor halo shuffle of the
@@ -153,7 +126,8 @@ object GraftExtensions extends SparkSessionExtensionsProvider {
     // no scale path (the per-window ROW count is unbounded, so the
     // driver-ring discipline doesn't apply).
     ext.injectOptimizerRule(_ => graft.plans.RangeSlidingAggRewrite)
-    ext.injectPlannerStrategy(_ => graft.plans.RangeSlidingAggStrategy)
+    // ONE planner strategy for all five window-family nodes above.
+    ext.injectPlannerStrategy(_ => graft.plans.WindowFamilyStrategy)
     ext.injectFunction((
       FunctionIdentifier("simhash64"),
       new ExpressionInfo(classOf[SimHash64].getName, "simhash64"),

@@ -11,7 +11,7 @@ import org.apache.spark.sql.catalyst.plans.logical.BROADCAST
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.internal.SQLConf
 
-/** GlobalRank's sibling for the OTHER empty-PARTITION-BY funnel: the
+/** The rank operator's sibling for the OTHER empty-PARTITION-BY funnel: the
   * share-of-total pattern `sum(x) OVER ()` / `count(*) OVER ()` —
   * an aggregate window with no partition, no order and an unbounded
   * frame. Spark plans it as AllTuples: every row shuffles into ONE
@@ -178,17 +178,16 @@ private[plans] object ExprIdFreshener {
   * annotating node sits in between. Peeled while unneeded:
   *
   *   - native [[LogicalWindow]] nodes (no window output referenced);
-  *   - the graft operator nodes ([[GlobalRankNode]],
-  *     [[GlobalRunningAggNode]], [[GlobalOffsetNode]],
-  *     [[SlidingAggNode]], [[GroupedRankNode]],
-  *     [[GroupedRunningAggNode]], [[RangeSlidingAggNode]],
-  *     [[GroupedOffsetNode]] (r20) — none of their produced
-  *     attributes referenced). These are also exactly the nodes
-  *     [[ExprIdFreshener]] cannot deep-copy (their fn payloads are
-  *     opaque to the expression walk), so peeling them is what lets
-  *     [[GlobalAggRewrite]]/[[GroupedAggRewrite]] fire ABOVE a
-  *     family-rewritten stack instead of leaving a native funnel
-  *     window on top of it;
+  *   - the graft operator nodes ([[WindowFamilyStrategy.plans]]:
+  *     [[GroupedRankNode]], [[GroupedRunningAggNode]],
+  *     [[GroupedOffsetNode]], [[SlidingAggNode]],
+  *     [[RangeSlidingAggNode]] — with or without partition keys, none
+  *     of their produced attributes referenced). These are also
+  *     exactly the nodes [[ExprIdFreshener]] cannot deep-copy (their
+  *     fn payloads are opaque to the expression walk), so peeling them
+  *     is what lets [[GlobalAggRewrite]]/[[GroupedAggRewrite]] fire
+  *     ABOVE a family-rewritten stack instead of leaving a native
+  *     funnel window on top of it;
   *   - [[Project]]s, NARROWED to the needed columns: the unneeded
   *     entries — including subquery-bearing aliases, which are what
   *     make the freshener refuse a leg — are dropped, and the peel
@@ -208,7 +207,7 @@ private[plans] object AggLegPeel {
           AttributeSet(w.windowExpressions.map(_.toAttribute))).isEmpty =>
       peel(w.child, needed)
     case n: UnaryNode
-        if isGraftWindowOp(n) && needed.intersect(n.producedAttributes).isEmpty =>
+        if WindowFamilyStrategy.plans(n) && needed.intersect(n.producedAttributes).isEmpty =>
       peel(n.child, needed)
     case p: Project
         if needed.subsetOf(AttributeSet(p.projectList.map(_.toAttribute))) =>
@@ -220,12 +219,5 @@ private[plans] object AggLegPeel {
         else Project(keep, below)
       }
     case other => other
-  }
-
-  private def isGraftWindowOp(n: LogicalPlan): Boolean = n match {
-    case _: GlobalRankNode | _: GlobalRunningAggNode | _: GlobalOffsetNode |
-         _: SlidingAggNode | _: GroupedRankNode | _: GroupedRunningAggNode |
-         _: RangeSlidingAggNode | _: GroupedOffsetNode => true
-    case _ => false
   }
 }

@@ -3,110 +3,110 @@ package graft.plans
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, Window => LogicalWindow}
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy}
 import org.apache.spark.sql.internal.SQLConf
 
-/** Splits MIXED-function GROUPED Window nodes onto the two grouped
-  * operators — [[GlobalWindowSplit]]'s sibling for nodes WITH
-  * partition keys (r18), closing the last window-surface scale hole.
+/** Splits MIXED-function Window nodes so the window-operator family
+  * composes automatically — the inverse of CollapseWindow for the one
+  * shape where collapsing is a scale pessimization.
   *
-  * The most natural grouped-report phrasing,
+  * The most natural report phrasings,
   *
-  * {{{ SELECT rank()   OVER (PARTITION BY g ORDER BY o),
+  * {{{ SELECT rank() OVER (ORDER BY d), sum(x) OVER (ORDER BY d) …
+  *     SELECT rank()   OVER (PARTITION BY g ORDER BY o),
   *            sum(x)   OVER (PARTITION BY g ORDER BY o) … }}}
   *
-  * analyzes to ONE Window node holding both functions.
-  * [[GroupedRankRewrite]] and [[GroupedRunningAggRewrite]] each fire
-  * only when EVERY expression in the node belongs to their class (a
-  * half-rewritten node would still hash-funnel the remainder), so the
-  * mixed node matched neither and planned fully native:
-  * `ClusteredDistribution(part)` — the GROUP-COUNT parallelism
-  * ceiling with the largest group's bytes through one task, the exact
-  * shape both operators were built to delete, reachable by a per-key
-  * leaderboard-plus-cumulative report.
+  * analyze to ONE Window node holding both functions (the analyzer
+  * groups window expressions by spec). Each family rewrite fires only
+  * when EVERY expression in the node belongs to its class — a
+  * deliberate guard (a half-rewritten node would compute the rest
+  * natively over a second funnel) — so the mixed node matches none of
+  * them and plans fully native: AllTuples (the whole corpus through a
+  * single task) without partition keys, `ClusteredDistribution(part)`
+  * (the GROUP-COUNT parallelism ceiling with the largest group's bytes
+  * through one task) with them — exactly the scale-killers the family
+  * exists to delete, reachable by the most common query phrasing.
   *
-  * The r14 "mixed grouped stays native" decision predates
-  * GroupedRunningAgg: its argument — the non-rank remainder had no
-  * operator, so a split pays a second exchange and still funnels —
-  * held until r17 gave the running-aggregate class its grouped
-  * operator. Since then BOTH grouped execs require the IDENTICAL
-  * `OrderedDistribution(part-asc ++ order)` (each canonicalizes the
-  * partition keys to Ascending/NullsFirst ahead of the frame order),
-  * so a rank+running mix stacks [[GroupedRankNode]] over
-  * [[GroupedRunningAggNode]] on ONE shared range exchange — the
-  * GlobalWindowSplit composition, grouped. Since r18 the grouped
-  * FULL-FRAME aggregate class (`sum(x) OVER (PARTITION BY g)`) splits
-  * too: it is re-emitted as an order-FREE grouped Window at the stack
-  * BOTTOM, exactly the shape [[GroupedAggRewrite]] consumes in a
-  * later iteration of the same fixed-point batch (aggregate +
-  * null-safe join-back; bottom placement keeps its duplicated
-  * aggregate leg to the raw child rather than replaying the stacked
-  * operators), and the bounded SLIDING ROWS class stacks
-  * [[SlidingAggNode]] into the same pile — its exec requires the
-  * identical `OrderedDistribution(part-asc ++ order)`, and the split
-  * honors its minBytes lever and boundary-VALUE traffic guard. Since
-  * r20 the OFFSET class (grouped lag/lead) stacks
-  * [[GroupedOffsetNode]] too — the r14 "offset-bearing mixes stay
-  * native" era ended when the class got its operator (the r19
-  * verdict's #1); its exec shares the identical
-  * `OrderedDistribution(part-asc ++ order)` and the split honors its
-  * maxOffset cap, minBytes lever and boundary-VALUE traffic guard.
+  * This rule runs in the same fixed-point batch and splits such a
+  * node by FUNCTION CLASS, emitting the family's logical nodes
+  * directly — one [[GroupedRankNode]] / [[GroupedRunningAggNode]] /
+  * [[GroupedOffsetNode]] / [[SlidingAggNode]] / [[RangeSlidingAggNode]]
+  * per present class, stacked over the child. Every one of their execs
+  * requires the IDENTICAL `OrderedDistribution(part-asc ++ order)`
+  * (each canonicalizes the partition keys to Ascending/NullsFirst ahead
+  * of the frame order), so the stack shares ONE range exchange (the
+  * q45 composition, produced automatically); the r16 tie-chaining
+  * makes that sharing safe under any legal finer partitioning.
+  * Emitting custom nodes rather than single-class Window nodes is
+  * load-bearing: CollapseWindow runs in the same batch and would
+  * re-merge adjacent spec-compatible Window nodes, fighting the split
+  * to a fixed-point standoff; the custom nodes are invisible to it.
+  * The one exception is the FULL-FRAME aggregate class (`sum(x) OVER
+  * ([PARTITION BY g] ORDER BY d ROWS BETWEEN UNBOUNDED PRECEDING AND
+  * UNBOUNDED FOLLOWING)` — order-insensitive by construction), which is
+  * re-emitted as an order-FREE `Window(…, part, Nil, …)` at the BOTTOM
+  * of the stack: [[GlobalAggRewrite]] (no keys) or
+  * [[GroupedAggRewrite]] (keys) consumes that shape in a later
+  * iteration of the same batch, and bottom placement keeps its
+  * duplicated aggregate leg to the raw child rather than replaying the
+  * stacked operators. (No Window adjacent to it shares its order-free
+  * spec, so CollapseWindow cannot re-merge it either.) A Project
+  * restores the original output column order (the stack groups
+  * columns by class; downstream references bind by exprId, but the
+  * node may be the query's top, where schema column ORDER is
+  * user-visible).
   *
-  * Emitting the custom logical nodes directly (not single-class
-  * Window nodes) is load-bearing for the same reason as in
-  * [[GlobalWindowSplit]]: CollapseWindow runs in the same fixed-point
-  * batch and would re-merge adjacent spec-compatible Window nodes;
-  * the custom nodes are invisible to it. A Project restores the
-  * user's output column order (the stack groups columns by class;
-  * downstream references bind by exprId, but the node may be the
-  * query top where schema order is user-visible).
-  *
-  * Tie contract — [[GlobalWindowSplit]]'s, scoped per group: the
-  * tie-STABLE members (rank/dense_rank/percent_rank/cume_dist,
-  * RANGE-frame running aggregates over exact types) are bit-identical
-  * to the native mixed node under any ties; tie-ARBITRARY members
-  * (row_number/ntile, ROWS-frame running first/min-by-order idioms)
-  * keep their per-function contract but give up CROSS-function tie
-  * consistency, because the two operators re-stream the shared
-  * shuffle in separate passes. No SQL contract promises that
-  * consistency; a total ORDER BY restores it (README documents the
-  * caveat next to the kill switch).
+  * Tie contract: the tie-STABLE functions (rank/dense_rank/
+  * percent_rank/cume_dist, RANGE-frame running aggregates over exact
+  * types, full-frame aggregates) are bit-identical to the native mixed
+  * node under any ties. The tie-ARBITRARY functions (row_number/ntile/
+  * lag/lead, ROWS-frame running first/min-by-order idioms) keep their
+  * per-function contract — a valid-but-arbitrary choice within each
+  * tie group, the same contract the native plan and the single-class
+  * operators already carry (TieSplitSpec pins it) — but the split
+  * gives up CROSS-function tie consistency: the native single task
+  * evaluates every function over one incidental row order, while the
+  * split's operators each re-stream the shared shuffle in separate
+  * passes whose equal-key merge order may differ, so `row_number()`
+  * and `lag(x)` in one SELECT may resolve the same tie differently.
+  * No SQL contract promises that consistency (it is unspecified even
+  * across two separate native queries), and any query needing it
+  * should make the order total — which also makes every function
+  * deterministic (README documents the caveat next to the kill switch).
   *
   * Scope guards are the families' own, conjoined: every window
-  * expression claimed by exactly one of the grouped classes via
-  * the family rewrites' OWN matchers (the split can never claim an
-  * expression the downstream operator would bail on); at least TWO
-  * classes present (single-class nodes are the family rewrites' own
-  * match); every PRESENT class's family conf enabled; partition keys
-  * deterministic AND orderable (they are promoted into
+  * expression claimed by exactly one class via the family rewrites'
+  * OWN matchers (the split can never claim an expression the
+  * downstream operator would bail on); at least TWO classes present
+  * (single-class nodes are the family rewrites' own match); every
+  * PRESENT class's family conf enabled (splitting a class that would
+  * stay native just adds exchanges in front of the same funnel);
+  * partition keys deterministic AND orderable (they are promoted into
   * RangePartitioning); order and subtree deterministic, non-streaming
   * child (two jobs per operator, one shuffle); the boundary
-  * byte-traffic guard on (part ++ order); the child must clear every
-  * present family's `minBytes` threshold — below a family's threshold
-  * its single-class node would stay native, so the split forcing the
+  * byte-traffic guard on (part ++ order); every present class's own
+  * driver-traffic guard and `minBytes` threshold — below either, its
+  * single-class node would stay native, so the split forcing the
   * operator would override the deployment's own cost lever; and a
   * full-agg class additionally requires the child to be
-  * exprId-freshenable ([[ExprIdFreshener]]) — splitting past
-  * GroupedAggRewrite's one structural bail would leave a NATIVE
-  * hash-clustered Window at the stack bottom: the funnel survives AND
-  * the operators above pay a new exchange, strictly worse than not
-  * splitting. Kill switch:
-  * `spark.graft.groupedWindowSplit.enabled=false`.
+  * exprId-freshenable ([[ExprIdFreshener]]) — splitting past the agg
+  * rewrites' one structural bail would leave a NATIVE funnel Window at
+  * the stack bottom: the funnel survives AND the operators above pay a
+  * new exchange, strictly worse than not splitting. Kill switch:
+  * `spark.graft.windowSplit.enabled=false`.
   */
 object GroupedWindowSplit extends Rule[LogicalPlan] {
 
-  val ConfKey = "spark.graft.groupedWindowSplit.enabled"
+  val ConfKey = "spark.graft.windowSplit.enabled"
 
   private def confOn(key: String): Boolean =
     SQLConf.get.getConfString(key, "true").toBoolean
 
-  /** One window expression claimed by exactly one grouped class, or
-    * None (unsupported anywhere → the whole node stays native). The
-    * two matchers are structurally disjoint (rank-family window
-    * functions vs aggregate/NthValue(,1) running frames); rank is
-    * tried first for symmetry with GlobalWindowSplit. allowLong=false:
-    * LongRankWiden is a global-window escape hatch — GroupedRankExec
-    * emits Int (a 2^31-row GROUP is a pathological key distribution,
-    * per its scaladoc). */
+  /** One window expression claimed by exactly one class, or None
+    * (unsupported anywhere → the whole node stays native). The
+    * matchers are structurally disjoint (rank-family window functions
+    * vs aggregate/NthValue(,1) running frames vs frame-less offsets vs
+    * full frames vs literal ROWS bounds vs RANGE-value bounds). */
   private sealed trait Claimed
   private case class CRank(fn: (Attribute, GlobalRankFn)) extends Claimed
   private case class CRunning(fn: RunningFn) extends Claimed
@@ -118,11 +118,12 @@ object GroupedWindowSplit extends Rule[LogicalPlan] {
   private val FullRowFrame =
     SpecifiedWindowFrame(RowFrame, UnboundedPreceding, UnboundedFollowing)
 
-  /** [[GroupedAggRewrite]]'s class, re-emitted on an order-free grouped
-    * spec with a normalized ROWS full frame — exactly the shape that
-    * rewrite consumes. Order-insensitivity is proven by the shared
-    * multiset whitelist inside [[GroupedAggRewrite.supported]], so
-    * dropping the node's order here cannot change the value. */
+  /** The agg rewrites' class, re-emitted on an order-free spec with a
+    * normalized ROWS full frame — exactly the shape [[GlobalAggRewrite]]
+    * (no keys) and [[GroupedAggRewrite]] (keys) consume.
+    * Order-insensitivity is proven by the shared multiset whitelist
+    * inside [[GroupedAggRewrite.supported]], so dropping the node's
+    * order here cannot change the value. */
   private def fullAgg(
       e: NamedExpression,
       part: Seq[Expression],
@@ -142,20 +143,14 @@ object GroupedWindowSplit extends Rule[LogicalPlan] {
       extentCap: Int,
       offsetCap: Int): Option[Claimed] =
     RankFnMatch.supported(e, part, order).map(CRank.apply)
-      .orElse(GlobalRunningAggRewrite.supported(e, part, order).map(CRunning.apply))
-      // r20: grouped lag/lead — GroupedOffsetExec requires the
-      // identical OrderedDistribution(part-asc ++ order), stacking on
-      // the shared exchange; ends the r14 "any offset member keeps
-      // the whole node native" era now the class has its operator
-      .orElse(GlobalOffsetRewrite.supported(e, part, order, offsetCap).map(COffset.apply))
+      .orElse(GroupedRunningAggRewrite.supported(e, part, order).map(CRunning.apply))
+      .orElse(GroupedOffsetRewrite.supported(e, part, order, offsetCap).map(COffset.apply))
       .orElse(fullAgg(e, part, order).map(CFullAgg.apply))
-      // r18: bounded sliding ROWS frames — SlidingAggExec requires the
-      // identical OrderedDistribution(part-asc ++ order), stacking on
-      // the shared exchange like the two grouped operators
       .orElse(SlidingAggRewrite.supported(e, part, order, extentCap).map(CSliding.apply))
-      // r19: bounded RANGE-VALUE frames — the row-halo operator shares
-      // the identical OrderedDistribution(part-asc ++ order); claimable
-      // only when the node's order is in the operator's recorded scope
+      // bounded RANGE-VALUE frames are claimable only when the node's
+      // order is in the row-halo operator's recorded scope (single ASC
+      // NULLS FIRST integral/date/timestamp), else the member stays
+      // unclaimed and the whole node native
       .orElse(RangeSlidingAggRewrite.supported(e, part, order)
         .filter(_ => RangeSlidingAggRewrite.orderOk(order)).map(CRangeSliding.apply))
 
@@ -163,8 +158,7 @@ object GroupedWindowSplit extends Rule[LogicalPlan] {
     if (!confOn(ConfKey)) return plan
     plan.transformUp {
       case w @ LogicalWindow(wexprs, part, order, child, _)
-          if part.nonEmpty && order.nonEmpty && wexprs.length >= 2 &&
-            !child.isStreaming &&
+          if order.nonEmpty && wexprs.length >= 2 && !child.isStreaming &&
             part.forall(e => e.deterministic && RowOrdering.isOrderable(e.dataType)) &&
             order.forall(_.deterministic) &&
             PlanGuards.subtreeDeterministic(child) &&
@@ -184,24 +178,24 @@ object GroupedWindowSplit extends Rule[LogicalPlan] {
           val rangeSlidings = claimed.collect { case CRangeSliding(f) => f }
           val classes = Seq[Seq[Any]](ranks, runnings, offsets, fullAggs,
             slidings, rangeSlidings).count(_.nonEmpty)
+          val aggConfKey =
+            if (part.isEmpty) GlobalAggRewrite.ConfKey else GroupedAggRewrite.ConfKey
           val allEnabled =
             (ranks.isEmpty || confOn(GroupedRankRewrite.ConfKey)) &&
               (runnings.isEmpty || confOn(GroupedRunningAggRewrite.ConfKey)) &&
               (offsets.isEmpty || confOn(GroupedOffsetRewrite.ConfKey)) &&
-              (fullAggs.isEmpty || confOn(GroupedAggRewrite.ConfKey)) &&
+              (fullAggs.isEmpty || confOn(aggConfKey)) &&
               (slidings.isEmpty || confOn(SlidingAggRewrite.ConfKey)) &&
               (rangeSlidings.isEmpty || confOn(RangeSlidingAggRewrite.ConfKey))
           // each present family's OWN accessor, so a family's default
           // (e.g. the offset class's r21 `auto` gate) cannot drift
           // between its single-class rewrite and the split
           val bigEnough = child.stats.sizeInBytes >= Seq(
-            if (ranks.nonEmpty) GroupedRankRewrite.minBytes else 0L,
-            if (runnings.nonEmpty) GroupedRunningAggRewrite.minBytes else 0L,
             if (offsets.nonEmpty) GroupedOffsetRewrite.minBytes else 0L,
-            if (fullAggs.nonEmpty) GroupedAggRewrite.minBytes else 0L,
+            if (fullAggs.nonEmpty && part.nonEmpty) GroupedAggRewrite.minBytes else 0L,
             if (slidings.nonEmpty) SlidingAggRewrite.minBytes else 0L,
             if (rangeSlidings.nonEmpty) RangeSlidingAggRewrite.minBytes else 0L).max
-          // mirrors GroupedAggRewrite's own bail exactly: peel the
+          // mirrors the agg rewrites' own bail exactly: peel the
           // would-be aggregate leg first (r19)
           val fullAggPlannable = fullAggs.isEmpty || ExprIdFreshener.freshen(
             AggLegPeel.peel(child,
@@ -216,19 +210,16 @@ object GroupedWindowSplit extends Rule[LogicalPlan] {
               slidings.flatMap(_.fn.references.toSeq).distinct, part,
               math.max(extent, 1))
           }
-          // the offset class's own boundary-VALUE traffic guard (r20;
-          // r21: head + tail — the guarded extent is maxLag + maxLead,
-          // mirroring the single-class rewrite)
-          val offsetOk = offsets.isEmpty || {
-            val extent = offsets.map(f => math.max(0, -f.offset)).max +
-              offsets.map(f => math.max(0, f.offset)).max
+          // the offset class's own boundary-VALUE traffic guard, priced
+          // exactly as the single-class rewrite prices it: head + tail
+          // plus each ignoreNulls lag's own ring
+          val offsetOk = offsets.isEmpty ||
             PlanGuards.valueTrafficOk("GroupedWindowSplit/offset",
-              offsets.map(_.input), part, math.max(extent, 1))
-          }
+              offsets.map(_.input), part, GroupedOffsetRewrite.shipExtent(offsets))
           if (classes < 2 || !allEnabled || !bigEnough || !fullAggPlannable ||
               !slidingOk || !offsetOk) w
           else {
-            logInfo(s"GroupedWindowSplit: splitting a mixed grouped window " +
+            logInfo(s"GroupedWindowSplit: splitting a mixed window " +
               s"(${ranks.size} rank, ${runnings.size} running-agg, " +
               s"${offsets.size} offset, " +
               s"${fullAggs.size} full-frame-agg, ${slidings.size} sliding, " +
@@ -246,5 +237,33 @@ object GroupedWindowSplit extends Rule[LogicalPlan] {
           }
         }
     }
+  }
+}
+
+/** The ONE planner strategy for the window-operator family (SNIPPETS
+  * [1]'s single-strategy shape): each logical node maps 1:1 onto its
+  * two-pass exec, with or without partition keys. */
+object WindowFamilyStrategy extends SparkStrategy {
+  override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
+    case GroupedRankNode(part, order, fns, child) =>
+      GroupedRankExec(part, order, fns, planLater(child)) :: Nil
+    case GroupedOffsetNode(part, order, fns, child) =>
+      GroupedOffsetExec(part, order, fns, planLater(child)) :: Nil
+    case GroupedRunningAggNode(part, order, fns, child) =>
+      GroupedRunningAggExec(part, order, fns, planLater(child)) :: Nil
+    case SlidingAggNode(part, order, fns, child) =>
+      SlidingAggExec(part, order, fns, planLater(child)) :: Nil
+    case RangeSlidingAggNode(part, order, fns, child) =>
+      RangeSlidingAggExec(part, order, fns, planLater(child)) :: Nil
+    case _ => Nil
+  }
+
+  /** True for the logical nodes this strategy plans — the
+    * row-preserving window operators that share the family's range
+    * exchange. */
+  def plans(p: LogicalPlan): Boolean = p match {
+    case _: GroupedRankNode | _: GroupedOffsetNode | _: GroupedRunningAggNode |
+         _: SlidingAggNode | _: RangeSlidingAggNode => true
+    case _ => false
   }
 }

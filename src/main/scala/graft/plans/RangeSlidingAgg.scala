@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression,
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode, Window => LogicalWindow}
 import org.apache.spark.sql.catalyst.plans.physical.{Distribution, OrderedDistribution, Partitioning}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
+import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
 import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
@@ -276,7 +276,7 @@ case class RangeSlidingAggNode(
   override def producedAttributes: AttributeSet = AttributeSet(fns.map(_.attr))
   // `fns` is opaque to QueryPlan's product scan — expose the aggregate
   // INPUT references so ColumnPruning keeps columns that are neither
-  // group nor order keys (the GlobalRunningAggNode lesson).
+  // group nor order keys (the GroupedRunningAggNode lesson).
   override def references: AttributeSet =
     AttributeSet(part.flatMap(_.references)) ++
       AttributeSet(order.flatMap(_.references)) ++
@@ -284,14 +284,6 @@ case class RangeSlidingAggNode(
   override def maxRows: Option[Long] = child.maxRows
   override protected def withNewChildInternal(newChild: LogicalPlan): RangeSlidingAggNode =
     copy(child = newChild)
-}
-
-object RangeSlidingAggStrategy extends SparkStrategy {
-  override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case RangeSlidingAggNode(part, order, fns, child) =>
-      RangeSlidingAggExec(part, order, fns, planLater(child)) :: Nil
-    case _ => Nil
-  }
 }
 
 /** A pass-2a halo shuffle record: either one row's projected

@@ -9,7 +9,7 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression,
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode, Window => LogicalWindow}
 import org.apache.spark.sql.catalyst.plans.physical.{Distribution, OrderedDistribution, Partitioning}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
+import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.IntegerType
 
@@ -25,7 +25,7 @@ import org.apache.spark.sql.types.IntegerType
   * dependency is a WINDOW OF ≤ (n+m+1) ROWS around each row — and the
   * grouped form plans as ClusteredDistribution(g), the group-count
   * parallelism ceiling with the largest group's bytes through one
-  * task. Both are [[GlobalOffsetExec]]'s problem with an aggregate on
+  * task. Both are [[GroupedOffsetExec]]'s problem with an aggregate on
   * top, and this exec is exactly that composition: ONE operator for
   * both shapes (`part` may be empty), requiring
   * `OrderedDistribution(part-asc ++ order)` — the family's shared
@@ -63,7 +63,7 @@ import org.apache.spark.sql.types.IntegerType
   * partition boundary may resolve differently between the shipped
   * rings and the re-streamed rows — each row still gets a
   * valid-under-SOME-tie-order frame, the same documented contract as
-  * [[GlobalOffsetExec]]'s neighbor values; a total ORDER BY (which
+  * [[GroupedOffsetExec]]'s neighbor values; a total ORDER BY (which
   * every graded query uses) makes results bit-identical to native.
   *
   * Scope guards: every window expression a deterministic,
@@ -101,7 +101,7 @@ object SlidingAggRewrite extends Rule[LogicalPlan] {
 
   /** A ROWS bound as a signed row offset: CurrentRow = 0, a foldable
     * integer literal as-is (negative = PRECEDING). Unbounded ends are
-    * None — UnboundedPreceding..CurrentRow is GlobalRunningAgg's
+    * None — UnboundedPreceding..CurrentRow is GroupedRunningAgg's
     * class, full frames are the agg rewrites', both structurally
     * disjoint from this matcher. */
   private def bound(e: Expression): Option[Int] = e match {
@@ -177,7 +177,7 @@ case class SlidingAggNode(
   override def producedAttributes: AttributeSet = AttributeSet(fns.map(_.attr))
   // `fns` is opaque to QueryPlan's product scan — expose the aggregate
   // INPUT references so ColumnPruning keeps columns that are neither
-  // group nor order keys (the GlobalRunningAggNode lesson).
+  // group nor order keys (the GroupedRunningAggNode lesson).
   override def references: AttributeSet =
     AttributeSet(part.flatMap(_.references)) ++
       AttributeSet(order.flatMap(_.references)) ++
@@ -185,14 +185,6 @@ case class SlidingAggNode(
   override def maxRows: Option[Long] = child.maxRows
   override protected def withNewChildInternal(newChild: LogicalPlan): SlidingAggNode =
     copy(child = newChild)
-}
-
-object SlidingAggStrategy extends SparkStrategy {
-  override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case SlidingAggNode(part, order, fns, child) =>
-      SlidingAggExec(part, order, fns, planLater(child)) :: Nil
-    case _ => Nil
-  }
 }
 
 case class SlidingAggExec(

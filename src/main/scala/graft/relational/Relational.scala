@@ -1143,10 +1143,10 @@ object Relational {
   // ---------------------------------------------------------------------
   // q42: GLOBAL customer-spend leaderboard — the corpus-global rank
   // surface graded end-to-end ON the GlobalRank operator
-  // (plans/GlobalRank.scala): both windows below have an EMPTY
+  // (plans/GroupedRank.scala): both windows below have an EMPTY
   // PARTITION BY, the classic Spark single-partition funnel, and are
   // planned by the rewrite as ONE range exchange + the two-pass
-  // offset stitch (the spec asserts GlobalRankExec and the absence
+  // offset stitch (the spec asserts the GlobalRank exec and the absence
   // of SinglePartition in this query's executed plan). Two orders
   // exercise both tie regimes: rank/dense_rank/percent_rank over
   // $1000 spend BANDS (real ties — tie-deterministic functions
@@ -1211,7 +1211,7 @@ object Relational {
   // ---------------------------------------------------------------------
   // q44: CUMULATIVE REVENUE CURVE — the business "running total over
   // time" report (ClickHouse `runningAccumulate`), graded end-to-end
-  // ON the GlobalRunningAgg operator (plans/GlobalRunningAgg.scala):
+  // ON the GlobalRunningAgg operator (plans/GroupedRunningAgg.scala):
   // a `sum OVER (ORDER BY …)` with an empty PARTITION BY is the last
   // global-window funnel, natively one task folding the corpus. Both
   // running frames are graded in one query: the default RANGE frame
@@ -1272,7 +1272,7 @@ object Relational {
       .orderBy($"o_orderdate")
   }
 
-  /** q46: MIXED GLOBAL WINDOW — the GlobalWindowSplit shape in the
+  /** q46: MIXED GLOBAL WINDOW — the mixed-window split shape in the
     * DuckDB gate. ONE select mixes all four family classes over the
     * same global order: rank + cume_dist (rank class), the running
     * total (running-agg class), the previous order's cents (offset
@@ -1281,7 +1281,7 @@ object Relational {
     * family rewrite correctly bailed on the mixed node and the corpus
     * funneled through a single task — the most natural phrasing of a
     * cumulative dashboard was the family's one remaining scale hole.
-    * GlobalWindowSplit (inverse-CollapseWindow) now splits the node by
+    * GroupedWindowSplit (inverse-CollapseWindow) now splits the node by
     * class into the stacked operators sharing ONE range exchange, with
     * the total rewritten to GlobalAgg's broadcast join
     * (MixedWindowSplitSpec pins the executed plan). The
@@ -1310,7 +1310,7 @@ object Relational {
           Window.unboundedPreceding, Window.unboundedFollowing)).as("total_cents"),
         // bounded sliding member (r18): makes the analyzed node carry
         // ALL FIVE operator classes — rank, running, offset, full-agg
-        // and sliding — through the GlobalWindowSplit and the DuckDB
+        // and sliding — through the GroupedWindowSplit and the DuckDB
         // gate in one graded query
         sum($"cents").over(w.rowsBetween(-6, 0)).as("trail_cents"))
       .orderBy($"o_orderkey")
@@ -1445,7 +1445,7 @@ object Relational {
   // corpus total / of its priority class" report phrases the
   // full-frame members on their OWN specs — `sum(x) OVER ()` and
   // `sum(x) OVER (PARTITION BY p)` with no ORDER BY — so the analyzer
-  // emits THREE separate Window nodes. Pre-r19, once GlobalRankRewrite
+  // emits THREE separate Window nodes. Pre-r19, once the rank rewrite
   // had claimed the ordered node, both agg rewrites bailed above it
   // (ExprIdFreshener cannot deep-copy the custom operator nodes) and
   // the totals survived as NATIVE windows — the corpus through one

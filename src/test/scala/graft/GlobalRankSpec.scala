@@ -17,7 +17,7 @@ class GlobalRankSpec extends AnyFunSuite {
   import TestSpark._
 
   private def withRule[A](on: Boolean)(body: => A): A =
-    TestSpark.withConf(graft.plans.GlobalRankRewrite.ConfKey, on.toString)(body)
+    TestSpark.withConf(graft.plans.GroupedRankRewrite.ConfKey, on.toString)(body)
 
   private def allSix(df: DataFrame): DataFrame = {
     val w = Window.orderBy(col("k").desc, col("id"))
@@ -200,7 +200,7 @@ class GlobalRankSpec extends AnyFunSuite {
     import s.implicits._
     val base = (1 to 400).map(i => (i.toLong, (i % 7).toDouble)).toDF("id", "k")
       .repartition(5)
-    val longKey = graft.plans.GlobalRankRewrite.LongRankKey
+    val longKey = graft.plans.GroupedRankRewrite.LongRankKey
     def widened(r: org.apache.spark.sql.Row) =
       (r.getLong(0), r.getLong(2), r.getLong(3), r.getLong(4),
         r.getDouble(5), r.getDouble(6), r.getInt(7), r.getInt(8))

@@ -175,11 +175,6 @@ class GroupedRunningAggSpec extends AnyFunSuite {
     // rejects it before any rewrite runs (EXPRESSION_TYPE_IS_NOT_
     // ORDERABLE on window PARTITION BY), so the rewrite's orderability
     // guard is belt-and-suspenders rather than spec-reachable
-    // minBytes lever: a huge floor keeps small inputs native
-    TestSpark.withConf(graft.plans.GroupedRunningAggRewrite.MinBytesKey, (1L << 60).toString) {
-      val small = data.select(sum($"cents").over(w).as("rs"))
-      assert(!planOf(small).contains("GroupedRunningAgg"))
-    }
     // kill switch
     withRule(on = false) {
       val off = data.select(sum($"cents").over(w).as("rs"))

@@ -5,12 +5,12 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** [[graft.plans.GroupedWindowSplit]] — the grouped analog of
-  * GlobalWindowSplit (VERDICT r17 "Next round" #1). A mixed grouped
-  * window, `SELECT rank() OVER (PARTITION BY g ORDER BY o), sum(x)
-  * OVER (PARTITION BY g ORDER BY o)` in ONE select, analyzes into ONE
-  * Window node; both grouped rewrites correctly bail on mixed nodes,
-  * so pre-split the node planned fully native over
+/** [[graft.plans.GroupedWindowSplit]] over keyed windows (VERDICT r17
+  * "Next round" #1; MixedWindowSplitSpec pins the zero-key case). A
+  * mixed grouped window, `SELECT rank() OVER (PARTITION BY g ORDER BY
+  * o), sum(x) OVER (PARTITION BY g ORDER BY o)` in ONE select,
+  * analyzes into ONE Window node; both grouped rewrites correctly bail
+  * on mixed nodes, so pre-split the node planned fully native over
   * `hashpartitioning(g)` — the group-count parallelism ceiling on the
   * most natural per-key leaderboard-plus-cumulative phrasing. These
   * cases pin:
@@ -191,14 +191,14 @@ class GroupedWindowSplitSpec extends AnyFunSuite {
     TestSpark.withConf(graft.plans.GroupedRunningAggRewrite.ConfKey, "false") {
       assertNative(plan(), "running family off")
     }
-    // below EITHER family's minBytes the single-class node would stay
-    // native, so the split must not force the operator past the
-    // deployment's own cost lever
-    TestSpark.withConf(graft.plans.GroupedRankRewrite.MinBytesKey, Long.MaxValue.toString) {
-      assertNative(plan(), "rank minBytes above child size")
-    }
-    TestSpark.withConf(graft.plans.GroupedRunningAggRewrite.MinBytesKey, Long.MaxValue.toString) {
-      assertNative(plan(), "running minBytes above child size")
+    // below a present family's minBytes its single-class node would
+    // stay native, so the split must not force the operator past the
+    // deployment's own cost lever (the offset class's gate)
+    TestSpark.withConf(graft.plans.GroupedOffsetRewrite.MinBytesKey, Long.MaxValue.toString) {
+      val p = data.select($"id", rank().over(w).as("r"), lag($"cents", 1).over(w).as("l"))
+        .queryExecution.executedPlan.toString
+      assert(!p.contains("GroupedRank") && !p.contains("GroupedOffset"),
+        "offset minBytes above child size must stay native:\n" + p.take(2000))
     }
     TestSpark.withConf(graft.plans.PlanGuards.MaxBoundaryBytesKey, "1") {
       assertNative(plan(), "boundary-traffic guard breached")
@@ -323,10 +323,10 @@ class GroupedWindowSplitSpec extends AnyFunSuite {
     val s = spark
     import s.implicits._
     data.createOrReplaceTempView("gmix_cross_t")
-    // two specs in one select analyze into TWO Window nodes;
-    // GroupedWindowSplit takes the grouped node, GlobalWindowSplit the
-    // empty-PARTITION-BY node — each onto its own operator stack over
-    // its own required ordering. All functions tie-STABLE.
+    // two specs in one select analyze into TWO Window nodes; the split
+    // takes the grouped node and the empty-PARTITION-BY node alike —
+    // each onto its own operator stack over its own required ordering.
+    // All functions tie-STABLE.
     val sqlText = """
       SELECT id, g, o, cents,
              rank()     OVER (PARTITION BY g ORDER BY o) AS gr,
@@ -336,29 +336,21 @@ class GroupedWindowSplitSpec extends AnyFunSuite {
       FROM gmix_cross_t"""
     def q(on: Boolean): Seq[Row] =
       TestSpark.withConf(graft.plans.GroupedWindowSplit.ConfKey, on.toString) {
-        TestSpark.withConf(graft.plans.GlobalWindowSplit.ConfKey, on.toString) {
-          val df = s.sql(sqlText)
-          if (on) {
-            val plan = df.queryExecution.executedPlan.toString
-            for (op <- Seq("GroupedRank", "GroupedRunningAgg",
-                "GlobalRank", "GlobalRunningAgg"))
-              assert(plan.contains(op),
-                s"$op missing from the cross-family plan:\n" + plan.take(3000))
-            assert(!plan.contains("Window ["),
-              "no native WindowExec may survive either split:\n" + plan.take(3000))
-            assert(!plan.contains("Exchange hashpartitioning"),
-              "no hash exchange in the cross-family plan:\n" + plan.take(3000))
-          }
-          df.collect().toSeq.sortBy(_.getLong(0))
+        val df = s.sql(sqlText)
+        if (on) {
+          val plan = df.queryExecution.executedPlan.toString
+          for (op <- Seq("GroupedRank", "GroupedRunningAgg",
+              "GlobalRank", "GlobalRunningAgg"))
+            assert(plan.contains(op),
+              s"$op missing from the cross-family plan:\n" + plan.take(3000))
+          assert(!plan.contains("Window ["),
+            "no native WindowExec may survive either split:\n" + plan.take(3000))
+          assert(!plan.contains("Exchange hashpartitioning"),
+            "no hash exchange in the cross-family plan:\n" + plan.take(3000))
         }
+        df.collect().toSeq.sortBy(_.getLong(0))
       }
-    def globalsOff[A](body: => A): A =
-      TestSpark.withConf(graft.plans.GlobalWindowSplit.ConfKey, "false") {
-        TestSpark.withConf(graft.plans.GlobalRankRewrite.ConfKey, "false") {
-          TestSpark.withConf(graft.plans.GlobalRunningAggRewrite.ConfKey, "false")(body)
-        }
-      }
-    assertSame(q(on = true), globalsOff(allOff(q(on = false))),
+    assertSame(q(on = true), allOff(q(on = false)),
       "grouped + global mixed windows in one select")
   }
 

@@ -32,13 +32,10 @@ class MixedSpecAggSpec extends AnyFunSuite {
   import TestSpark._
 
   private val AllConfKeys = Seq(
-    graft.plans.GlobalWindowSplit.ConfKey,
     graft.plans.GroupedWindowSplit.ConfKey,
-    graft.plans.GlobalRankRewrite.ConfKey,
     graft.plans.GroupedRankRewrite.ConfKey,
     graft.plans.GroupedRunningAggRewrite.ConfKey,
-    graft.plans.GlobalOffsetRewrite.ConfKey,
-    graft.plans.GlobalRunningAggRewrite.ConfKey,
+    graft.plans.GroupedOffsetRewrite.ConfKey,
     graft.plans.GlobalAggRewrite.ConfKey,
     graft.plans.GroupedAggRewrite.ConfKey,
     graft.plans.SlidingAggRewrite.ConfKey,
@@ -75,11 +72,10 @@ class MixedSpecAggSpec extends AnyFunSuite {
       .map(_.rules.map(_.ruleName).filter(_.startsWith("graft.plans")))
       .filter(_.nonEmpty)
     assert(batches.nonEmpty, "no optimizer batch carries the graft rules")
-    for (rules <- batches if rules.contains("graft.plans.GlobalWindowSplit")) {
-      val laterRules = Seq("graft.plans.GlobalWindowSplit",
-        "graft.plans.GroupedWindowSplit", "graft.plans.GlobalRankRewrite",
+    for (rules <- batches if rules.contains("graft.plans.GroupedWindowSplit")) {
+      val laterRules = Seq("graft.plans.GroupedWindowSplit",
         "graft.plans.GroupedRankRewrite", "graft.plans.GroupedRunningAggRewrite",
-        "graft.plans.GlobalOffsetRewrite", "graft.plans.GlobalRunningAggRewrite",
+        "graft.plans.GroupedOffsetRewrite",
         "graft.plans.SlidingAggRewrite", "graft.plans.RangeSlidingAggRewrite")
       for (agg <- Seq("graft.plans.GlobalAggRewrite", "graft.plans.GroupedAggRewrite");
            fam <- laterRules) {
@@ -195,7 +191,7 @@ class MixedSpecAggSpec extends AnyFunSuite {
   test("mixed-SPEC offset cousin + cross global/grouped: lag + sum OVER (), and global rank + grouped total") {
     val s = spark
     data.createOrReplaceTempView("msa_x")
-    // offset sibling: the GlobalOffsetNode peels out of the total's leg
+    // offset sibling: the zero-key offset node peels out of the total's leg
     val offSql = """
       SELECT id, cents,
              lag(cents, 1, 0) OVER (ORDER BY id) AS prev,
@@ -232,7 +228,7 @@ class MixedSpecAggSpec extends AnyFunSuite {
     data.createOrReplaceTempView("msa_o")
     // `needed` includes the rank column, so nothing can be peeled —
     // this shape distributes ONLY because GlobalAggRewrite now runs
-    // before GlobalRankRewrite and duplicates the still-native Window
+    // before the rank rewrite and duplicates the still-native Window
     // into the aggregate leg (both legs then plan on GlobalRank)
     val sqlText = """
       SELECT id, r, sum(r) OVER () AS rsum
@@ -288,16 +284,19 @@ class MixedSpecAggSpec extends AnyFunSuite {
              sum(cents) OVER (ORDER BY id) AS run,
              sum(cents) OVER () AS tot
       FROM msa_r""").queryExecution.analyzed
-    val gsplit = graft.plans.GlobalWindowSplit(ganalyzed)
-    assert(gsplit.exists(_.isInstanceOf[graft.plans.GlobalRankNode]),
+    val gsplit = graft.plans.GroupedWindowSplit(ganalyzed)
+    assert(gsplit.exists {
+      case n: graft.plans.GroupedRankNode => n.part.isEmpty
+      case _ => false
+    },
       "test setup: the global split must have fired:\n" + gsplit)
     val gafter = graft.plans.GlobalAggRewrite(gsplit)
     assert(!gafter.exists(_.isInstanceOf[LWindow]),
       "GlobalAggRewrite must consume the full-agg node above the custom stack:\n" + gafter)
     val gjoin = gafter.collectFirst { case j: LJoin => j }.get
     assert(!gjoin.right.exists(n =>
-      n.isInstanceOf[graft.plans.GlobalRankNode] ||
-        n.isInstanceOf[graft.plans.GlobalRunningAggNode]),
+      n.isInstanceOf[graft.plans.GroupedRankNode] ||
+        n.isInstanceOf[graft.plans.GroupedRunningAggNode]),
       "the global aggregate leg must not replay the operator stack:\n" + gjoin.right)
     // the RANGE-value cousin (r19): RangeSlidingAggRewrite first, then
     // GlobalAggRewrite must peel the RangeSlidingAggNode out of its leg

@@ -5,10 +5,11 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** [[graft.plans.GlobalWindowSplit]] — the inverse-CollapseWindow rule
-  * (VERDICT r16 "Next round" #1). The most natural corpus-global
-  * phrasing, `SELECT rank() OVER (ORDER BY d), sum(x) OVER (ORDER BY
-  * d)` in ONE select, analyzes into ONE mixed Window node; every
+/** [[graft.plans.GroupedWindowSplit]] over zero-key windows — the
+  * inverse-CollapseWindow rule (VERDICT r16 "Next round" #1). The most
+  * natural corpus-global phrasing, `SELECT rank() OVER (ORDER BY d),
+  * sum(x) OVER (ORDER BY d)` in ONE select, analyzes into ONE mixed
+  * Window node; every
   * family rewrite correctly bails on mixed nodes, so pre-split the
   * whole corpus funneled through a single task on the most common
   * phrasing. These cases pin:
@@ -35,10 +36,10 @@ class MixedWindowSplitSpec extends AnyFunSuite {
 
   /** All five levers at once: the split plus the four family rules. */
   private def allOff[A](body: => A): A =
-    TestSpark.withConf(graft.plans.GlobalWindowSplit.ConfKey, "false") {
-      TestSpark.withConf(graft.plans.GlobalRankRewrite.ConfKey, "false") {
-        TestSpark.withConf(graft.plans.GlobalRunningAggRewrite.ConfKey, "false") {
-          TestSpark.withConf(graft.plans.GlobalOffsetRewrite.ConfKey, "false") {
+    TestSpark.withConf(graft.plans.GroupedWindowSplit.ConfKey, "false") {
+      TestSpark.withConf(graft.plans.GroupedRankRewrite.ConfKey, "false") {
+        TestSpark.withConf(graft.plans.GroupedRunningAggRewrite.ConfKey, "false") {
+          TestSpark.withConf(graft.plans.GroupedOffsetRewrite.ConfKey, "false") {
             TestSpark.withConf(graft.plans.GlobalAggRewrite.ConfKey, "false")(body)
           }
         }
@@ -110,7 +111,7 @@ class MixedWindowSplitSpec extends AnyFunSuite {
                               AND 2 FOLLOWING) AS band
       FROM mix5_t"""
     def q(on: Boolean): Seq[Row] =
-      TestSpark.withConf(graft.plans.GlobalWindowSplit.ConfKey, on.toString) {
+      TestSpark.withConf(graft.plans.GroupedWindowSplit.ConfKey, on.toString) {
         val df = s.sql(sqlText)
         if (on) {
           val plan = df.queryExecution.executedPlan.toString
@@ -137,7 +138,7 @@ class MixedWindowSplitSpec extends AnyFunSuite {
     val s = spark
     import s.implicits._
     def q(splitOn: Boolean): Seq[Row] =
-      TestSpark.withConf(graft.plans.GlobalWindowSplit.ConfKey, splitOn.toString) {
+      TestSpark.withConf(graft.plans.GroupedWindowSplit.ConfKey, splitOn.toString) {
         // rank/dense_rank/cume_dist and the RANGE-frame running sum
         // are tie-STABLE, so bit-equality is well-defined under the
         // 100-row d tie groups even though the order is not total
@@ -181,14 +182,14 @@ class MixedWindowSplitSpec extends AnyFunSuite {
         sum($"cents").over(w).as("run"))
       df.queryExecution.executedPlan.toString
     }
-    TestSpark.withConf(graft.plans.GlobalWindowSplit.ConfKey, "false") {
+    TestSpark.withConf(graft.plans.GroupedWindowSplit.ConfKey, "false") {
       val p = plan()
       assert(!p.contains("GlobalRank") && !p.contains("GlobalRunningAgg"), p.take(2000))
     }
     // a disabled family means its class would stay a native funnel —
     // splitting then just adds exchanges in front of it, so the rule
     // must leave the node whole
-    TestSpark.withConf(graft.plans.GlobalRunningAggRewrite.ConfKey, "false") {
+    TestSpark.withConf(graft.plans.GroupedRunningAggRewrite.ConfKey, "false") {
       val p = plan()
       assert(!p.contains("GlobalRank") && !p.contains("GlobalRunningAgg"), p.take(2000))
     }
@@ -239,7 +240,7 @@ class MixedWindowSplitSpec extends AnyFunSuite {
              nth_value(cn, 1) OVER (ORDER BY id) AS nv1
       FROM fv_t"""
     def q(on: Boolean): Seq[Row] =
-      TestSpark.withConf(graft.plans.GlobalRunningAggRewrite.ConfKey, on.toString) {
+      TestSpark.withConf(graft.plans.GroupedRunningAggRewrite.ConfKey, on.toString) {
         val df = s.sql(sqlText)
         if (on) {
           val plan = df.queryExecution.executedPlan.toString
@@ -284,7 +285,7 @@ class MixedWindowSplitSpec extends AnyFunSuite {
     // the full distributed ranking and the filter applies above it
     val w = Window.orderBy($"id")
     def q(splitOn: Boolean): Seq[Row] =
-      TestSpark.withConf(graft.plans.GlobalWindowSplit.ConfKey, splitOn.toString) {
+      TestSpark.withConf(graft.plans.GroupedWindowSplit.ConfKey, splitOn.toString) {
         val df = data.select($"id", rank().over(w).as("r"),
             sum($"cents").over(w).as("run"))
           .filter($"r" <= 100)
@@ -357,5 +358,42 @@ class MixedWindowSplitSpec extends AnyFunSuite {
     assert(pGrouped.contains("GroupedRank"), pGrouped.take(1500))
     assert(pMixed.contains("GlobalRank") && pMixed.contains("GlobalRunningAgg"),
       pMixed.take(1500))
+  }
+
+  test("split offset traffic guard: a cap between the key and the value estimate keeps a rank + lag(64) node whole and native") {
+    val s = spark
+    import s.implicits._
+    // pass 1 of the rank class ships 2 order keys per partition (8 B
+    // each); the offset class ships 64 lagged value tuples (8 B each).
+    // A cap between the two estimates admits the rank operator alone
+    // but not the offset operator, so a mixed node must not be split:
+    // the split would plan the offset operator past the cap its own
+    // rewrite honours.
+    val parts = s.conf.get("spark.sql.shuffle.partitions").toLong
+    val keyEstimate = parts * 2L * 8L
+    val valueEstimate = parts * 64L * 8L
+    val cap = (keyEstimate + valueEstimate) / 2L
+    val w = Window.orderBy($"id")
+    TestSpark.withConf(graft.plans.PlanGuards.MaxBoundaryBytesKey, cap.toString) {
+      val rankOnly = data.select($"id", rank().over(w).as("r"))
+        .queryExecution.executedPlan.toString
+      assert(rankOnly.contains("GlobalRank"),
+        "the key estimate is under the cap — the rank operator must plan:\n" +
+          rankOnly.take(2000))
+      val lagOnly = data.select($"id", lag($"cents", 64).over(w).as("l"))
+        .queryExecution.executedPlan.toString
+      assert(!lagOnly.contains("GlobalOffset"),
+        "the value estimate is over the cap — lag(64) alone stays native:\n" +
+          lagOnly.take(2000))
+      def mixed() = data.select($"id", rank().over(w).as("r"),
+        lag($"cents", 64).over(w).as("l"))
+      val df = mixed()
+      val plan = df.queryExecution.executedPlan.toString
+      assert(!plan.contains("GlobalRank") && !plan.contains("GlobalOffset") &&
+        plan.contains("Window ["),
+        "the mixed node must stay whole and native:\n" + plan.take(2500))
+      assertSame(df.collect().toSeq.sortBy(_.getLong(0)),
+        allOff(mixed().collect().toSeq.sortBy(_.getLong(0))), "guarded mixed node")
+    }
   }
 }

@@ -80,7 +80,7 @@ class PassOneSkipSpec extends AnyFunSuite {
   test("GlobalRunningAgg: single partition skips the prefix job") {
     val w = Window.orderBy(col("o"), col("id"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    check(plans.GlobalRunningAggRewrite.ConfKey, "GlobalRunningAgg", "grun") { () =>
+    check(plans.GroupedRunningAggRewrite.ConfKey, "GlobalRunningAgg", "grun") { () =>
       data.select(col("id"), sum(col("cents")).over(w).as("run"))
     }
   }
@@ -88,7 +88,7 @@ class PassOneSkipSpec extends AnyFunSuite {
   test("GlobalRunningAgg RANGE frames: single partition skips the prefix job") {
     val w = Window.orderBy(col("o"))
       .rangeBetween(Window.unboundedPreceding, Window.currentRow)
-    check(plans.GlobalRunningAggRewrite.ConfKey, "GlobalRunningAgg", "grunR") { () =>
+    check(plans.GroupedRunningAggRewrite.ConfKey, "GlobalRunningAgg", "grunR") { () =>
       data.select(col("id"), sum(col("cents")).over(w).as("run"))
     }
   }
@@ -118,7 +118,7 @@ class PassOneSkipSpec extends AnyFunSuite {
 
   test("GlobalRank rank-only: single partition skips the stats job") {
     val w = Window.orderBy(col("o"), col("id"))
-    check(plans.GlobalRankRewrite.ConfKey, "GlobalRank", "grank") { () =>
+    check(plans.GroupedRankRewrite.ConfKey, "GlobalRank", "grank") { () =>
       data.select(col("id"), rank().over(w).as("r"),
         dense_rank().over(w).as("d"), row_number().over(w).as("rn"))
     }
@@ -129,11 +129,11 @@ class PassOneSkipSpec extends AnyFunSuite {
     val w = Window.orderBy(col("o"), col("id"))
     val mk = () => data.select(col("id"), rank().over(w).as("r"),
       percent_rank().over(w).as("p"))
-    val plan = withConf(plans.GlobalRankRewrite.ConfKey, "true")(
+    val plan = withConf(plans.GroupedRankRewrite.ConfKey, "true")(
       onePartition(mk().queryExecution.executedPlan.toString))
     assert(plan.contains("GlobalRank"), plan.take(2000))
     val (onRows, offRows, onJobs) =
-      flipCount(plans.GlobalRankRewrite.ConfKey, "grankP")(mk)
+      flipCount(plans.GroupedRankRewrite.ConfKey, "grankP")(mk)
     assert(onRows == offRows, "percent_rank single-partition rows must equal native")
     assert(onJobs == 2,
       s"percent_rank needs totalN before the first emit — pass 1 must " +
@@ -180,5 +180,64 @@ class PassOneSkipSpec extends AnyFunSuite {
     assert(got._2 == 1,
       s"every pass-1 skipped (r22: rank's too) — expected 1 job (the " +
         s"collect), saw ${got._2}")
+  }
+
+  /** Jobs ONE action schedules with AQE partition coalescing off and 4
+    * shuffle partitions: every operator exchange keeps 4 partitions, so
+    * each exec runs its range sample, pass 1, the driver stitch and
+    * pass 2. Returns the sorted rows and the job count of the action's
+    * group. */
+  private def fourPartitionJobs(tag: String)(mk: () => DataFrame): (Seq[Row], Int) = {
+    val s = spark
+    withConf("spark.sql.adaptive.coalescePartitions.enabled", "false") {
+      withConf("spark.sql.shuffle.partitions", "4") {
+        val gid = s"p1multi-$tag"
+        s.sparkContext.setJobGroup(gid, "multi-partition job budget")
+        try {
+          val rows = mk().collect().toSeq.sortBy(_.getLong(0))
+          (rows, s.sparkContext.statusTracker.getJobIdsForGroup(gid).length)
+        } finally s.sparkContext.clearJobGroup()
+      }
+    }
+  }
+
+  /** The benchmark's `w_global_rank_running_sum` shape — rank and
+    * dense_rank over a tied order plus a running sum over another —
+    * with `part` as its partition clause: two operator nodes, two
+    * range exchanges. */
+  private def rankRunning(part: Seq[org.apache.spark.sql.Column]): () => DataFrame = () => {
+    val wr = Window.partitionBy(part: _*).orderBy(col("cents"))
+    val ws = Window.partitionBy(part: _*).orderBy(col("id"))
+    data.select(col("id"), rank().over(wr).as("rk"), dense_rank().over(wr).as("drk"),
+      sum(col("cents")).over(ws).as("run"))
+  }
+
+  /** Pins the multi-partition job budget of `mk`: 7 jobs = per node a
+    * range-sample job, its map stage and its pass-1 job, plus the
+    * collect; a stage added to either exec fails here first. */
+  private def checkBudget(tag: String, op: String)(mk: () => DataFrame): Unit = {
+    val plan = withConf("spark.sql.adaptive.coalescePartitions.enabled", "false") {
+      withConf("spark.sql.shuffle.partitions", "4") {
+        val df = mk()
+        df.collect()
+        df.queryExecution.executedPlan.toString
+      }
+    }
+    assert(plan.contains(s"${op}Rank") && plan.contains(s"${op}RunningAgg"), plan.take(2500))
+    val (got, jobs) = fourPartitionJobs(tag)(mk)
+    val ref = withConf(plans.GroupedRankRewrite.ConfKey, "false") {
+      withConf(plans.GroupedRunningAggRewrite.ConfKey, "false")(
+        fourPartitionJobs(s"$tag-native")(mk)._1)
+    }
+    assert(got == ref, s"$op rank + running rows must equal native")
+    assert(jobs == 7, s"$op rank + running on 4 partitions: expected 7 jobs, saw $jobs")
+  }
+
+  test("multi-partition budget: zero-key rank + dense_rank + running sum runs 7 jobs on 4 partitions") {
+    checkBudget("zero", "Global")(rankRunning(Nil))
+  }
+
+  test("multi-partition budget: one-key rank + dense_rank + running sum runs 7 jobs on 4 partitions") {
+    checkBudget("one", "Grouped")(rankRunning(Seq(col("g"))))
   }
 }

@@ -163,16 +163,10 @@ class RangeSlidingAggSpec extends AnyFunSuite {
     val s = spark
     import s.implicits._
     def allOff[A](body: => A): A =
-      TestSpark.withConf(graft.plans.GlobalWindowSplit.ConfKey, "false") {
-        TestSpark.withConf(graft.plans.GroupedWindowSplit.ConfKey, "false") {
-          TestSpark.withConf(graft.plans.GlobalRankRewrite.ConfKey, "false") {
-            TestSpark.withConf(graft.plans.GroupedRankRewrite.ConfKey, "false") {
-              TestSpark.withConf(graft.plans.GlobalRunningAggRewrite.ConfKey, "false") {
-                TestSpark.withConf(graft.plans.GroupedRunningAggRewrite.ConfKey, "false") {
-                  withRule(on = false)(body)
-                }
-              }
-            }
+      TestSpark.withConf(graft.plans.GroupedWindowSplit.ConfKey, "false") {
+        TestSpark.withConf(graft.plans.GroupedRankRewrite.ConfKey, "false") {
+          TestSpark.withConf(graft.plans.GroupedRunningAggRewrite.ConfKey, "false") {
+            withRule(on = false)(body)
           }
         }
       }

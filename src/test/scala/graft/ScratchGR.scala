@@ -1,9 +1,10 @@
 package graft
 
-/** Dev tool (test scope — ships in no jar): A/B GroupedRank on/off per
-  * affected query in ONE JVM (session-conf lever, BenchCore
-  * methodology). Results recorded in PLANS.md ("GroupedRank A/B",
-  * r15); run via `sbt "Test/runMain graft.ScratchGR"`. */
+/** Dev tool (test scope — ships in no jar): A/B the rank operator
+  * on/off per affected query in ONE JVM (session-conf lever, BenchCore
+  * methodology; `spark.graft.rank.enabled` flips grouped and zero-key
+  * rankings together). Results recorded in PLANS.md ("GroupedRank
+  * A/B", r15); run via `sbt "Test/runMain graft.ScratchGR"`. */
 object ScratchGR {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")

@@ -13,7 +13,6 @@ object TestSpark {
     // native. Specs pin the OPERATOR contract, so the harness session
     // disables the gate; the gate's own default is pinned by
     // dedicated cases via `withConf(key, "auto")`.
-    s.conf.set(plans.GlobalOffsetRewrite.MinBytesKey, "0")
     s.conf.set(plans.GroupedOffsetRewrite.MinBytesKey, "0")
     s
   }
